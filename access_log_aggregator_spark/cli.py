@@ -190,7 +190,6 @@ def _run_log_files(args, ap) -> int:
             # no-op. Incremental tailing of growing logs is the
             # SnapshotTable/--stream path, not this mode.
             pipe = Pipeline(spark, out, lookup,
-                            use_arrow_udf=not args.no_arrow_udf,
                             salt_buckets=args.salt_buckets,
                             write_partitions=args.write_partitions)
             # sorted by the SAME canonical string embedded in the hash, so
@@ -228,8 +227,7 @@ def _run_log_files(args, ap) -> int:
             # class counts ride the aggregation job via observe(), so the
             # files scan once; the metric set is process_batch's own
             # (observe_routed_classes), so the two modes count identically
-            routed = build_routed(pages, lookup,
-                                  use_arrow_udf=not args.no_arrow_udf)
+            routed = build_routed(pages, lookup)
             routed, obs = observe_routed_classes(routed, "logfile_counts")
             valid = routed.filter(
                 F.col("match_class").isin(X.CLASS_PARSED, X.CLASS_BOT))
@@ -277,8 +275,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--write-partitions", type=int, default=None, metavar="N",
                     help="explicit repartition(N, url) before the sink write "
                          "(balances write tasks / bounds file count under skew)")
-    ap.add_argument("--no-arrow-udf", action="store_true",
-                    help="use the pure-JVM regexp extractor instead of the pandas UDF")
     ap.add_argument("--compact", action="store_true",
                     help="after processing, compact the routed sink's small "
                          "files into one replace snapshot (maintenance job; "
@@ -429,7 +425,6 @@ def main(argv: list[str] | None = None) -> int:
 
         lookup = spark.createDataFrame(generate_host_lookup(seed=args.seed))
         pipe = Pipeline(spark, args.out, lookup,
-                        use_arrow_udf=not args.no_arrow_udf,
                         salt_buckets=args.salt_buckets,
                         write_partitions=args.write_partitions)
         # mode-ownership guard, BOTH directions: --log-file already refuses

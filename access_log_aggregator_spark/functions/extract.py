@@ -377,9 +377,3 @@ def validate_and_parse(
     if duration == 0.0:
         return REASON_INVALID_FIELD, None
     return None, ts
-
-
-def validate_fields(f: ParsedFields) -> Optional[str]:
-    """Reason-only view of :func:`validate_and_parse` (kept for callers and
-    tests that don't need the parsed timestamp)."""
-    return validate_and_parse(f)[0]

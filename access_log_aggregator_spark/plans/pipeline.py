@@ -24,7 +24,6 @@ from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Optional
 
-import pandas as pd
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -80,9 +79,9 @@ def observe_routed_classes(routed: DataFrame, name: str):
     return counted, obs
 
 
-def build_routed(pages: DataFrame, lookup: DataFrame, use_arrow_udf: bool = True) -> DataFrame:
+def build_routed(pages: DataFrame, lookup: DataFrame) -> DataFrame:
     """The lazy logical plan for one batch (no action taken)."""
-    parsed = parse_stage(pages, use_arrow_udf=use_arrow_udf)
+    parsed = parse_stage(pages)
     enriched = enrich(parsed, lookup)
     routed = route(enriched)
     return routed.select(*ROUTED_COLUMNS)
@@ -101,13 +100,11 @@ class Pipeline:
     """Batch pipeline bound to a routed sink table + aggregate tables."""
 
     def __init__(self, spark: SparkSession, out_root: str | Path,
-                 lookup: DataFrame, use_arrow_udf: bool = True,
-                 salt_buckets: Optional[int] = None,
+                 lookup: DataFrame, salt_buckets: Optional[int] = None,
                  write_partitions: Optional[int] = None):
         self.spark = spark
         self.out_root = Path(out_root)
         self.lookup = lookup
-        self.use_arrow_udf = use_arrow_udf
         self.salt_buckets = salt_buckets
         #: explicit pre-write repartition on url (north_rule: "handles
         #: warc_ts/url skew via explicit repartitioning"): url hashes spread
@@ -122,12 +119,22 @@ class Pipeline:
         """Parse+enrich+route one batch of pages and commit it to the routed
         sink (idempotent on batch_id). Counts come from observe() metrics on
         the write action itself — no second scan of the input."""
-        routed = build_routed(pages, self.lookup, self.use_arrow_udf)
+        routed = build_routed(pages, self.lookup)
 
         counted, obs = observe_routed_classes(
             routed, f"route_metrics_{batch_id}"
         )
-        snap = self._append_partitioned(counted, marker=batch_id)
+        t = self.routed_table
+        if batch_id in t.committed_markers():
+            snap = None  # idempotent re-run: skip the write job entirely
+        else:
+            if self.write_partitions:
+                counted = counted.repartition(self.write_partitions,
+                                              F.col("url"))
+            # write once, hive-partitioned by match_class (the single-pass
+            # fan-out)
+            snap = t.append_spark(counted, marker=batch_id,
+                                  partition_by="match_class")
         got = obs.get if snap is not None else {}
         counts = {c: int(got.get(c, 0)) for c in X.ALL_CLASSES}
         return BatchResult(
@@ -137,50 +144,6 @@ class Pipeline:
             malformed=counts[X.CLASS_UNPARSED] + counts[X.CLASS_ERROR],
             rows_in=int(got.get("rows_in", 0)),
         )
-
-    def _append_partitioned(self, routed: DataFrame, marker: str) -> Optional[int]:
-        """Write once, hive-partitioned by match_class (the single-pass fan-out).
-
-        The committed row count rides the write job itself as an
-        Observation (executor-side collect-metrics), like
-        ``SnapshotTable.append_spark``: the commit does ZERO driver-side
-        parquet footer reads — at 10^5 files/commit a footer sweep (one
-        ~KB metadata read per file) would be the last serial stage of an
-        otherwise parallel pipeline, even thread-pooled. The renames that
-        remain are metadata-only ops that map onto a manifest rewrite (no
-        move at all) on a real object-store catalog — see SCALE.md."""
-        t = self.routed_table
-        if marker in t.committed_markers():
-            return None  # idempotent re-run: batch already committed
-        import shutil
-        import uuid
-
-        staging = t.root / f"_staging-{uuid.uuid4().hex}"
-        if self.write_partitions:
-            routed = routed.repartition(self.write_partitions, F.col("url"))
-        obs = Observation()  # auto-named: marker replays create new instances
-        routed = routed.observe(obs, F.count(F.lit(1)).alias("rows"))
-        routed.write.mode("overwrite").partitionBy("match_class").parquet(str(staging))
-        rows = int(obs.get["rows"])
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        files = sorted(staging.glob("match_class=*/*.parquet"))
-        for rel_dir in {p.parent.name for p in files}:
-            (t.root / "data" / rel_dir).mkdir(parents=True, exist_ok=True)
-
-        def ingest(p):
-            dest = t.root / "data" / p.parent.name / f"part-{uuid.uuid4().hex}.parquet"
-            shutil.move(str(p), dest)
-            return dest
-
-        if files:
-            with ThreadPoolExecutor(min(16, len(files))) as ex:
-                moved = list(ex.map(ingest, files))
-        else:
-            moved = []
-        shutil.rmtree(staging, ignore_errors=True)
-        return t._commit_files(moved, rows, marker)
 
     # -- reads over the routed sink -------------------------------------------
     def routed(self) -> Optional[DataFrame]:
@@ -398,6 +361,3 @@ def summary_text_from_agg(agg: Optional[DataFrame], now=None) -> str:
             )
     return format_summaries(ss, now=now)
 
-
-def lookup_df(spark: SparkSession, lookup_pdf: pd.DataFrame) -> DataFrame:
-    return spark.createDataFrame(lookup_pdf)

@@ -183,6 +183,14 @@ def _all_markers(m: dict) -> set[str]:
             | set(m.get("expired_markers", [])))
 
 
+def _unlink_unreferenced(files: list[Path], referenced: set[str]) -> None:
+    """Drop freshly staged ``files`` that no snapshot references (a refused
+    or deduplicated commit must not leak them, nor delete shared files)."""
+    for f in files:
+        if str(f) not in referenced:
+            f.unlink(missing_ok=True)
+
+
 def _marker_snapshot_id(m: dict, marker: str) -> Optional[int]:
     """The snapshot id an already-committed ``marker`` resolves to, or None
     if the marker was never committed. A marker whose snapshot was removed
@@ -476,9 +484,7 @@ class SnapshotTable:
             if dup_id is not None:
                 # duplicate commit: drop the freshly staged files (never
                 # referenced), keep the table as-is
-                for f in files:
-                    if str(f) not in referenced:
-                        f.unlink(missing_ok=True)
+                _unlink_unreferenced(files, referenced)
                 return dup_id
             cur = m["snapshots"][-1]["id"] if m["snapshots"] else None
             if expected_current is not None:
@@ -491,9 +497,7 @@ class SnapshotTable:
                 # never re-mint the captured id (ABA), so id equality
                 # really does mean "the exact state the rewrite read".
                 if cur != expected_current:
-                    for f in files:
-                        if str(f) not in referenced:
-                            f.unlink(missing_ok=True)
+                    _unlink_unreferenced(files, referenced)
                     raise CommitConflict(
                         f"table advanced (current={cur}, expected="
                         f"{expected_current}); retry the operation"
@@ -501,9 +505,7 @@ class SnapshotTable:
             if unconvertible and "schemas" in m:
                 # in-lock twin of _precheck_schema's refusal: a racing
                 # first-append may have adopted a schema since the precheck
-                for f in files:
-                    if str(f) not in referenced:
-                        f.unlink(missing_ok=True)
+                _unlink_unreferenced(files, referenced)
                 raise SchemaMismatch(
                     "frame contains arrow types outside the Spark type "
                     "mapping — cannot validate against the tracked table "
@@ -538,9 +540,7 @@ class SnapshotTable:
                     except SchemaMismatch:
                         # same cleanup basis as the conflict path above:
                         # staged files no snapshot references must not leak
-                        for f in files:
-                            if str(f) not in referenced:
-                                f.unlink(missing_ok=True)
+                        _unlink_unreferenced(files, referenced)
                         raise
                     schema_id = m["current_schema_id"]
             sid = max(cur or 0, int(m.get("last_id", 0))) + 1
@@ -957,7 +957,8 @@ class SnapshotTable:
         return self._commit_files(staged, n, marker, stats=stats,
                                   schema=union, unconvertible=not union_ok)
 
-    def append_spark(self, df: DataFrame, marker: Optional[str] = None) -> int:
+    def append_spark(self, df: DataFrame, marker: Optional[str] = None,
+                     partition_by: Optional[str] = None) -> int:
         """Write a DataFrame's partitions as one snapshot (staging dir + move).
 
         The committed ``row_count`` comes from an :class:`~pyspark.sql.
@@ -966,26 +967,48 @@ class SnapshotTable:
         machinery — so the commit path does ZERO driver-side footer reads.
         At 10^5 files/commit a driver footer sweep (one ~KB metadata read
         per file, serial) would be the last sequential stage of an
-        otherwise parallel pipeline; the file *renames* that remain are
-        pure metadata ops and map onto a manifest-rewrite (no move at all)
-        on a real object-store catalog. ``add_files`` keeps the footer
-        path: it registers pre-existing files without running a job."""
+        otherwise parallel pipeline; the file *renames* that remain run on
+        a thread pool, are pure metadata ops, and map onto a
+        manifest-rewrite (no move at all) on a real object-store catalog
+        (SCALE.md). ``add_files`` keeps the footer path: it registers
+        pre-existing files without running a job.
+
+        ``partition_by`` writes hive-partitioned files under
+        ``data/<col>=<value>/``. Those files omit the partition column, so
+        the commit is untracked (``schema=None``) — the routed sink's
+        layout."""
+        from concurrent.futures import ThreadPoolExecutor
+
         from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
-        self._precheck_schema(df.schema)  # fail BEFORE running the write job
+        schema = df.schema if partition_by is None else None
+        if schema is not None:
+            self._precheck_schema(schema)  # fail BEFORE running the write job
         staging = self.root / f"_staging-{uuid.uuid4().hex}"
-        obs = Observation()
-        df.observe(obs, F.count(F.lit(1)).alias("rows")) \
-            .write.mode("overwrite").parquet(str(staging))
+        obs = Observation()  # auto-named: marker replays create new instances
+        writer = df.observe(obs, F.count(F.lit(1)).alias("rows")) \
+            .write.mode("overwrite")
+        if partition_by is not None:
+            writer = writer.partitionBy(partition_by)
+        writer.parquet(str(staging))
         n = int(obs.get["rows"])
-        moved: list[Path] = []
-        for p in sorted(staging.glob("*.parquet")):
-            dest = self.root / "data" / f"part-{uuid.uuid4().hex}.parquet"
+        files = sorted(staging.glob(
+            "*.parquet" if partition_by is None
+            else f"{partition_by}=*/*.parquet"))
+        for rel_dir in {p.parent.relative_to(staging) for p in files}:
+            (self.root / "data" / rel_dir).mkdir(parents=True, exist_ok=True)
+
+        def move(p: Path) -> Path:
+            dest = (self.root / "data" / p.parent.relative_to(staging)
+                    / f"part-{uuid.uuid4().hex}.parquet")
             shutil.move(str(p), dest)
-            moved.append(dest)
+            return dest
+
+        with ThreadPoolExecutor(max(1, min(16, len(files)))) as ex:
+            moved = list(ex.map(move, files))
         shutil.rmtree(staging, ignore_errors=True)
-        return self._commit_files(moved, n, marker, schema=df.schema)
+        return self._commit_files(moved, n, marker, schema=schema)
 
     def truncate(self) -> None:
         """Drop all snapshots and DELETE their data files (full-recompute

@@ -153,7 +153,7 @@ def test_local_class_small_input_is_lossless(spark):
         assert abs(s.quantile(q) - np.quantile(np.arange(100.0), q)) <= 1.0
 
 
-def test_validation():
+def test_validation(spark):
     with pytest.raises(ValueError):
         KLL(k=4)
     s = KLL()
@@ -162,6 +162,13 @@ def test_validation():
         s.quantile(1.5)
     with pytest.raises(ValueError):
         s.merge(KLL(k=64))
+    # a misspelled group column raises before any Spark job is planned
+    sk = kll_sketch_table(spark.range(10).selectExpr("'a' AS host", "id AS v"),
+                          "v", ["host"])
+    with pytest.raises(ValueError, match="hots"):
+        kll_merge(sk, ["hots"])
+    with pytest.raises(ValueError, match="hots"):
+        kll_quantiles(sk, [0.5], ["hots"])
 
 
 def test_plan_shape_sketch_rows_only_shuffle(spark, latencies):

@@ -502,3 +502,47 @@ def test_write_partitions_repartition(spark, corpus, lookup_sdf, tmp_path_factor
         cls_files = [f for f in p.routed_table.data_files()
                      if f"match_class={cls}" in f]
         assert 0 < len(cls_files) <= 4, cls
+
+
+def test_replayed_batch_starts_no_spark_job(spark, corpus, lookup_sdf,
+                                             tmp_path_factory):
+    """Replaying a committed batch_id skips the write job: no Spark job
+    starts, the manifest stays byte-identical and no staging dir is left."""
+    import time
+
+    root = tmp_path_factory.mktemp("replay")
+    p = Pipeline(spark, root / "out", lookup_sdf)
+    pages = spark.createDataFrame(corpus.pages.iloc[:200])
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs_started_by(fn, group):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # the tracker is fed by an async listener bus: once a LATER job is
+        # visible, every event of ``fn``'s jobs has been applied too
+        sc.setJobGroup(f"{group}-fence", "fence")
+        try:
+            sc.parallelize([0], 1).count()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.time() + 60
+        while not tracker.getJobIdsForGroup(f"{group}-fence"):
+            assert time.time() < deadline, "fence job never reached the tracker"
+            time.sleep(0.05)
+        return out, tracker.getJobIdsForGroup(group)
+
+    first, jobs = jobs_started_by(lambda: p.process_batch(pages, "b1"),
+                                  "first-commit")
+    assert first.snapshot_id == 1 and jobs  # the probe does see real jobs
+    manifest = (p.routed_table.root / "manifest.json").read_bytes()
+
+    again, jobs = jobs_started_by(lambda: p.process_batch(pages, "b1"),
+                                  "replay")
+    assert again.snapshot_id is None and again.rows_in == 0
+    assert jobs == []
+    assert (p.routed_table.root / "manifest.json").read_bytes() == manifest
+    assert not list(p.routed_table.root.glob("_staging-*"))

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from access_log_aggregator_spark.sources.tableio import SnapshotTable
 
@@ -614,30 +615,54 @@ def test_crash_mid_manifest_write_preserves_old_manifest(tmp_path, monkeypatch):
     assert sid == 2 and t.row_count() == 6
 
 
-def test_append_spark_commit_reads_zero_parquet_footers(tmp_path, spark, monkeypatch):
+@pytest.mark.parametrize("partition_by", [None, "match_class"])
+def test_append_spark_commit_reads_zero_parquet_footers(tmp_path, spark,
+                                                        monkeypatch,
+                                                        partition_by):
     """append_spark's committed row_count comes from the write job's own
     Observation (executor-side collect-metrics), NOT from driver-side
     footer reads — at 10^5 files/commit a serial footer sweep would be
     the last sequential stage of the pipeline. Poisoning pq.read_metadata
     proves the commit path never touches it (add_files keeps the footer
-    path: it registers files without running a job)."""
+    path: it registers files without running a job). The partitioned
+    form is the routed sink's write: hive layout, untracked commit."""
+    import json
+    import re
+
     from access_log_aggregator_spark.sources import tableio as tio
 
     def boom(*a, **k):
         raise AssertionError("driver-side footer read on the commit path")
 
+    cols = ("id AS a", "'x' AS b",
+            "IF(id % 3 = 0, 'parsed', 'bot') AS match_class")
     t = SnapshotTable.create(tmp_path / "t")
-    df = spark.range(0, 1000).selectExpr("id AS a", "'x' AS b").repartition(4)
+    df = spark.range(0, 1000).selectExpr(*cols).repartition(4)
     monkeypatch.setattr(tio.pq, "read_metadata", boom)
-    sid = t.append_spark(df, marker="spark-1")
-    empty = spark.range(0, 0).selectExpr("id AS a", "'x' AS b")
-    sid_empty = t.append_spark(empty, marker="spark-empty")
+    sid = t.append_spark(df, marker="spark-1", partition_by=partition_by)
+    empty = spark.range(0, 0).selectExpr(*cols)
+    sid_empty = t.append_spark(empty, marker="spark-empty",
+                               partition_by=partition_by)
     monkeypatch.undo()
     assert sid == 1 and sid_empty == 2
     assert t.row_count() == 1000
-    assert t.read(spark).count() == 1000
+    if partition_by is None:
+        assert t.read(spark).count() == 1000
+    else:
+        files = t.data_files()
+        assert {f.rsplit("/", 2)[-2] for f in files} == {
+            "match_class=parsed", "match_class=bot"}
+        assert all(re.search(r"/data/match_class=\w+/part-[0-9a-f]+\.parquet$",
+                             f) for f in files), files
+        manifest = json.loads((t.root / "manifest.json").read_text())
+        assert "schemas" not in manifest
+        got = spark.read.option("basePath", str(t.root / "data")) \
+            .parquet(*files)
+        assert got.filter("match_class = 'parsed'").count() == 334
+    assert not list(t.root.glob("_staging-*"))
     # marker replay still dedupes on the Observation path
-    assert t.append_spark(df, marker="spark-1") == 1
+    assert t.append_spark(df, marker="spark-1",
+                          partition_by=partition_by) == 1
     assert t.row_count() == 1000
 
 
